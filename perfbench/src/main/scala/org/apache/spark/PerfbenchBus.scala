@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the listener bus's flush, which Spark keeps package-private:
+  * the benchmark reads its listener records only after every posted
+  * event has been delivered. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
